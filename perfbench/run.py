@@ -9,14 +9,12 @@ the outputs, and prints one JSON object as the last stdout line:
 {"correct", "attempted", "failed", "metrics"}. With --trace 0 the metrics
 are the end-to-end metrics of BENCHMARK.json; with --trace 1 they are its
 per-layer metrics, from a traced JVM (for crawl_session it also repeats
-the measured waves at local[1], for the scaling diagnostic); the tracing
-overhead is taken against the untraced runs made in this checkout.
-Lines before the last one give every metric with quartiles and sample count, the output checks, and
-each failed operation with its cause. Run artifacts (logs, spans,
-fingerprints of earlier runs) go to .bench_out/.
-
---record-expected rewrites perfbench/expected/query_suite.tsv from this
-run's query outputs; use it only when the query tables change.
+the first measured wave at local[1], for the scaling diagnostic); the
+tracing overhead is taken against the untraced runs made in this
+checkout. Lines before the last one give every metric with quartiles and
+sample count, the output checks, and each failed operation with its
+cause. Run artifacts (logs, spans, fingerprints of earlier runs) go to
+.bench_out/.
 """
 import argparse
 import hashlib
@@ -32,7 +30,10 @@ from pathlib import Path
 BUILD = Path(".bench_build")
 OUT = Path(".bench_out")
 RUN_LIMIT_S = 175
-BUILD_LIMIT_S = 800
+# A run that builds may take up to 900 s in all: the build, then the
+# workload (for a first traced run, also the untraced run it compares to).
+FIRST_RUN_LIMIT_S = 880
+BUILD_LIMIT_S = 600
 JDK_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
@@ -88,15 +89,23 @@ def ensure_built():
     return True
 
 
-def run_jvm(args, deadline, extra=()):
+def run_jvm(args, deadline):
     """One benchmark JVM; returns its report (the last stdout line)."""
     OUT.mkdir(exist_ok=True)
     tmp = OUT / "tmp"
     tmp.mkdir(exist_ok=True)
-    # A fixed-size heap and young generation keep peak RSS from depending
-    # on the collector's resizing decisions.
-    cmd = ["java", "-Xms3g", "-Xmx3g", "-Xmn1g", "-XX:+UseParallelGC",
-           "-XX:-UseAdaptiveSizePolicy", "-XX:-UsePerfData", "-Xss8m",
+    # A fixed heap and young generation keep peak RSS from depending on
+    # the collector's resizing decisions. RSS counts only the heap pages a
+    # run touches (the young generation and the old one up to the most
+    # data promoted into it), and the heap is about twice what a run
+    # touches, so a rise of peak RSS shows before an OutOfMemoryError.
+    # Spark keeps generating code, so the JIT compiles all through a run;
+    # two compiler threads (one per tier) instead of the JVM's three keep
+    # compilation from taking the cores the measured work runs on, which
+    # on a 4-core host made run-to-run times swing with the JIT's timing.
+    cmd = ["java", "-Xms6g", "-Xmx6g", "-Xmn1g", "-XX:+UseParallelGC",
+           "-XX:-UseAdaptiveSizePolicy", "-XX:CICompilerCount=2",
+           "-XX:-UsePerfData", "-Xss8m",
            f"-Djava.io.tmpdir={tmp.resolve()}"]
     for p in JDK_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
@@ -104,8 +113,8 @@ def run_jvm(args, deadline, extra=()):
             "perfbench.Main", "--workload", args.workload,
             "--seed", str(args.seed), "--seconds", str(args.seconds),
             "--trace", str(args.trace),
-            "--cores", str(args.cores), "--partitions", str(args.cores),
-            "--out", str(OUT), *extra]
+            "--cores", str(args.cores),
+            "--out", str(OUT)]
     log = OUT / f"{args.workload}-seed{args.seed}-trace{args.trace}.log"
     t0 = time.time()
     with open(log, "w") as err:
@@ -160,9 +169,9 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], required=True)
-    ap.add_argument("--record-expected", action="store_true")
     args = ap.parse_args()
-    deadline = time.time() + RUN_LIMIT_S
+    start = time.time()
+    deadline = start + RUN_LIMIT_S
 
     bench = Path("BENCHMARK.json")
     if not bench.is_file():
@@ -173,23 +182,24 @@ def main():
     if not Path("src/main/scala").is_dir():
         fail("no program sources (src/main/scala) next to the benchmark")
     spark_jars()
-    if ensure_built():  # a first run may spend its time building
-        deadline = time.time() + RUN_LIMIT_S
+    if ensure_built():
+        deadline = start + FIRST_RUN_LIMIT_S
 
     args.cores = len(os.sched_getaffinity(0))
     reports = []
     if args.trace == 0:
-        base = run_jvm(args, deadline,
-                       ["--record", "1"] if args.record_expected else [])
+        base = run_jvm(args, deadline)
         reports.append(base)
         if not base["failures"]:
             untraced_history(args.workload, base["metrics"])
         declared = spec["end_to_end"]
         values = base["metrics"]
     else:
-        # Tracing overhead = traced minus untraced end-to-end numbers; the
-        # untraced side is the median of this checkout's untraced runs of
-        # the same sources (one is run first if there are none).
+        # Tracing overhead = what tracing costs on each end-to-end metric:
+        # traced minus untraced value, or untraced minus traced for a
+        # higher-is-better metric, so every overhead is lower-is-better.
+        # The untraced side is the median of this checkout's untraced runs
+        # of the same sources (one is run first if there are none).
         if not untraced_history(args.workload):
             base = run_jvm(argparse.Namespace(**{**vars(args), "trace": 0}),
                            deadline)
@@ -203,8 +213,9 @@ def main():
             n = m["name"]
             base_vals = [r[n] for r in runs if n in r]
             if base_vals and n in traced["metrics"]:
-                layers[f"Trace.{n}.overhead"] = (
-                    traced["metrics"][n]["value"] - statistics.median(base_vals))
+                cost = traced["metrics"][n]["value"] - statistics.median(base_vals)
+                layers[f"Trace.{n}.overhead"] = \
+                    -cost if m["better"] == "higher" else cost
         declared = spec["per_layer"]
         values = {}
         for m in declared:

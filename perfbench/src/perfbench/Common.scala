@@ -2,6 +2,8 @@ package perfbench
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -83,6 +85,15 @@ object Common {
       .forEach(p => Files.deleteIfExists(p))
     finally s.close()
   }
+
+  /** Collection time of every garbage collector of this JVM, in seconds. */
+  def gcSeconds(): Double = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
+
+  /** Time the JIT compilers of this JVM have spent, in seconds. */
+  def jitSeconds(): Double =
+    java.lang.management.ManagementFactory.getCompilationMXBean
+      .getTotalCompilationTime / 1e3
 
   /** Peak resident set of this process (VmHWM), in MB. */
   def peakRssMb(): Double = {

@@ -16,16 +16,32 @@ import Common._
   * data processors (J4 dedupe, enrichment). The session's work is fixed
   * rather than time-boxed, so state size and the dedupe's input are the
   * same on every commit; `--seconds` does not change it. The measured
-  * part takes about 20 s on a 4-core host.
+  * part takes about 35 s on a 4-core host.
+  *
+  * A full collection follows every wave, outside its timed window: each
+  * wave starts from the same compacted heap, so peak RSS follows the
+  * largest wave instead of the garbage promoted over the whole session.
   */
 object CrawlSession {
-  val PagesN = 20000L
+  /** Large enough that Spark's size estimate of the pages table (128 B a
+    * row) passes the 10 MB broadcast threshold, so the fetch join
+    * reshuffles the pages table every wave, as it does at full scale.
+    */
+  val PagesN = 100000L
   val Hosts = 100
   val HotHosts = 3
   val SeedCount = 4000
   /** The first waves run cold code (JIT, codegen); they count as set-up. */
-  val WarmUpWaves = 3
-  val MeasuredWaves = 3
+  val WarmUpWaves = 2
+  /** Five, so the median wave does not move when one wave is slow: the
+    * first measured wave (still compiling, and compacting the frontier)
+    * or one that a busy host slowed.
+    */
+  val MeasuredWaves = 5
+  /** Waves the scaling diagnostic repeats at local[1]: the first measured
+    * one, which also compacts the frontier, so every phase runs.
+    */
+  val ScalingWaves = 1
 
   /** The job descriptions `CrawlEngine.runWave` sets, minus `wave-N`. */
   val Phases = Seq("counters", "discover-links", "commit-articles",
@@ -44,14 +60,16 @@ object CrawlSession {
   }
 
   private def measuredWaves(e: CrawlEngine, rep: Report,
-                            tracer: Option[Tracer]): Measured = {
+                            tracer: Option[Tracer], count: Int): Measured = {
     val from = System.currentTimeMillis()
     val cpu0 = cpuSeconds()
-    val waves = (1 to MeasuredWaves).flatMap { _ =>
+    val waves = (1 to count).flatMap { _ =>
       val id = s"wave-${e.lastCompleteWave + 1}"
       val start = System.currentTimeMillis()
-      rep.op(id)(seconds(traced(tracer, id, id, "session")(e.runWave())))
+      val r = rep.op(id)(seconds(traced(tracer, id, id, "session")(e.runWave())))
         .map { case (st, s) => (st, s, (start, System.currentTimeMillis())) }
+      System.gc()
+      r
     }
     val m = Measured(waves.map(_._1), waves.map(_._2), waves.map(_._3), from,
       System.currentTimeMillis(), cpuSeconds() - cpu0)
@@ -86,11 +104,15 @@ object CrawlSession {
     val e = new CrawlEngine(spark, stateDir.toString, in.pages, in.robots,
       config(partitions))
     e.init(in.seeds)
-    val warm = (1 to WarmUpWaves).flatMap(w => rep.op(s"wave-$w")(e.runWave()))
+    val warm = (1 to WarmUpWaves).flatMap { w =>
+      val r = rep.op(s"wave-$w")(e.runWave())
+      System.gc()
+      r
+    }
     rep.metric("setup_s", "s", sessionS + (System.nanoTime() - t0) / 1e9)
     warmCopy.foreach(copyTree(stateDir, _))
 
-    val m = measuredWaves(e, rep, tracer)
+    val m = measuredWaves(e, rep, tracer, MeasuredWaves)
     val cpu0 = cpuSeconds()
     val articles = e.articlesBaseNow().count()
     val (tomb, dedupeS) = seconds(rep.op("dedupeArticles")(
@@ -111,6 +133,9 @@ object CrawlSession {
     enriched.foreach(n => rep.sample("enriched_articles", "count", n.toDouble))
 
     checks(rep, e, warm ++ m.stats, tomb, in.altSeeds)
+    if (warmCopy.isDefined)
+      rep.fingerprints("seen_scaling_waves") =
+        seenFingerprint(e, WarmUpWaves + ScalingWaves)
     // before the traced-only probe below, so traced and untraced runs
     // measure the same work
     rep.metric("peak_rss_mb", "MB", peakRssMb())
@@ -146,28 +171,30 @@ object CrawlSession {
   }
 
   /** Reopen a state copied by [[run]] after its warm-up waves (the
-    * engine's resume path) and run the same measured waves again — the
-    * scaling diagnostic runs this on one core. The seen table it leaves
-    * must equal the full session's.
+    * engine's resume path) and run the first [[ScalingWaves]] measured
+    * waves again — the scaling diagnostic runs this on one core. The seen
+    * table it leaves must equal the full session's up to those waves.
     */
   def resume(spark: SparkSession, rep: Report, seed: Long, partitions: Int,
              tracer: Option[Tracer], stateDir: Path): Unit = {
     val in = Inputs.crawl(spark, seed, PagesN, Hosts, HotHosts, SeedCount)
     val e = new CrawlEngine(spark, stateDir.toString, in.pages, in.robots,
       config(partitions))
-    measuredWaves(e, rep, tracer)
-    rep.fingerprints("seen_wave_url") = seenFingerprint(e)
+    measuredWaves(e, rep, tracer, ScalingWaves)
+    rep.fingerprints("seen_scaling_waves") =
+      seenFingerprint(e, WarmUpWaves + ScalingWaves)
   }
 
-  /** (waveId, url) over the seen table: the wave that first lists a data
-    * dir is the wave that wrote it.
+  /** (waveId, url) over the seen table, for the waves up to `upToWave`:
+    * the wave that first lists a data dir is the wave that wrote it.
     */
-  private def seenFingerprint(e: CrawlEngine): String = {
+  private def seenFingerprint(e: CrawlEngine,
+                              upToWave: Long = Long.MaxValue): String = {
     val dirWave = e.seenT.history.flatMap(c => c.dirs.map(_ -> c.waveId))
       .groupBy(_._1).map { case (d, ws) => d -> ws.map(_._2).min }
     val tagged = e.seenUrls().select(col("url"), element_at(typedLit(dirWave),
       regexp_extract(input_file_name(), "/data/([^/]+)/", 1)).as("waveId"))
-    val (rows, fp) = fingerprint(tagged)
+    val (rows, fp) = fingerprint(tagged.filter(col("waveId") <= upToWave))
     s"$rows:$fp"
   }
 

@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
 /** One benchmark run in its own JVM:
   * {{{
   *   perfbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *                  --cores <c> --partitions <p> --out <dir>
-  *                  [--record 1]
+  *                  --cores <c> --out <dir>
   * }}}
+  * Shuffle partitions equal `--cores`; the local[1] scaling diagnostic
+  * keeps that partition count, so both runs do the same tasks.
   * Prints the run's report as one JSON object on the last stdout line;
   * `perfbench/run.py` turns it into the benchmark's result line.
   */
@@ -24,7 +25,7 @@ object Main {
     val seconds = a("seconds").toDouble
     val traced = a("trace") == "1"
     val cores = a("cores").toInt
-    val partitions = a("partitions").toInt
+    val partitions = cores
     val out = Paths.get(a("out")).toAbsolutePath
 
     def session(cores: Int): SparkSession = {
@@ -56,8 +57,7 @@ object Main {
         case "query_suite" =>
           QuerySuite.run(spark, rep, seed, sessionS, seconds, tracer,
             Paths.get("perfbench/data/sf0.01").toAbsolutePath.toString,
-            Paths.get("perfbench/expected/query_suite.tsv"),
-            record = a.get("record").contains("1"))
+            Paths.get("perfbench/expected/query_suite.tsv"))
       }))
     if (!rep.metrics.contains("peak_rss_mb"))
       rep.metric("peak_rss_mb", "MB", Common.peakRssMb())
@@ -65,9 +65,9 @@ object Main {
       s"spans-$workload-seed$seed-cores$cores.json").toString))
     spark.stop()
 
-    // Scaling diagnostic (traced crawl runs only): the same measured waves
-    // on one core, with the same partition counts, resumed from the state
-    // the session had after its warm-up waves.
+    // Scaling diagnostic (traced crawl runs only): the first measured wave
+    // again on one core, with the same partition count, resumed from the
+    // state the session had after its warm-up waves.
     if (scaling) {
       val one = session(1)
       val rep1 = new Report(workload, seed, 1)
@@ -75,20 +75,25 @@ object Main {
         partitions, Some(new Tracer(one)), stateDir("warm")))
       one.stop()
       rep.check("local[1] resume leaves the same seen table") {
-        val (a, b) = (rep.fingerprints.get("seen_wave_url"),
-          rep1.fingerprints.get("seen_wave_url"))
+        val (a, b) = (rep.fingerprints.get("seen_scaling_waves"),
+          rep1.fingerprints.get("seen_scaling_waves"))
         (a.isDefined && a == b, s"local[$cores] $a, local[1] $b")
       }
       CrawlSession.Phases.foreach { ph =>
         rep.layers(s"CrawlEngine.$ph.busy_s_1core") =
           rep1.layers.getOrElse(s"CrawlEngine.$ph.busy_s", Double.NaN)
       }
-      val thr = Seq(rep, rep1).map(_.metrics.get("throughput_per_s").map(_._1))
-      rep.layers("CrawlEngine.scaling_eff") =
-        thr(0).zip(thr(1)).map { case (n, o) => n / o / cores }.getOrElse(Double.NaN)
+      // the same waves from the same state: wall time at 1 core over
+      // wall time at `cores` cores, per core
+      val wall = Seq(rep, rep1).map(_.samples.get("wave_s")
+        .map(_._2.take(CrawlSession.ScalingWaves).sum))
+      rep.layers("CrawlEngine.scaling_eff") = wall(0).zip(wall(1))
+        .map { case (n, o) => o / n / cores }.getOrElse(Double.NaN)
       rep.attempted += rep1.attempted
       rep.failures ++= rep1.failures.map(f => f + ("op" -> s"local[1] ${f("op")}"))
     }
+    rep.sample("jvm_gc_s", "s", Common.gcSeconds())
+    rep.sample("jvm_jit_s", "s", Common.jitSeconds())
     println(rep.json)
   }
 

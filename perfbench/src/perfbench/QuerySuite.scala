@@ -40,6 +40,13 @@ object QuerySuite {
     */
   val PassSeconds = 4.0
 
+  /** Passes before timing starts. Spark keeps handing the JIT new code,
+    * so a pass's CPU time falls for about ten passes; after two passes
+    * the measured ones still fell by a quarter from first to last, and
+    * runs differed by how far the compiler had got.
+    */
+  val WarmUpPasses = 4
+
   /** Queries whose output depends on the current date; they are checked
     * by row count only. None of the selected queries reads the clock.
     */
@@ -50,7 +57,7 @@ object QuerySuite {
 
   def run(spark: SparkSession, rep: Report, seed: Long, sessionS: Double,
           seconds: Double, tracer: Option[Tracer], dataDir: String,
-          expectedFile: Path, record: Boolean): Unit = {
+          expectedFile: Path): Unit = {
     val t0 = System.nanoTime()
     val rnd = new scala.util.Random(seed)
     val results = scala.collection.mutable.LinkedHashMap[String, Set[(Long, String)]]()
@@ -73,8 +80,13 @@ object QuerySuite {
       s
     }
 
-    // two passes: the first runs cold code, the second still compiles
-    (1 to 2).foreach(i => pass(s"warm-up-$i", measured = false))
+    // A full collection after every pass, outside the timed window: each
+    // pass starts from the same heap, and peak RSS follows the largest
+    // pass instead of the garbage promoted over the whole run.
+    (1 to WarmUpPasses).foreach { i =>
+      pass(s"warm-up-$i", measured = false)
+      System.gc()
+    }
     rep.metric("setup_s", "s", sessionS + (System.nanoTime() - t0) / 1e9)
 
     // a fixed pass count (not a time box), so every run of a commit
@@ -87,6 +99,7 @@ object QuerySuite {
       val s = traced(tracer, label, label, "session")(pass(label, measured = true))
       rep.sample("suite_s", "s", s)
       rep.sample("suite_cpu_s", "s", cpuSeconds() - cpu0)
+      System.gc()
     }
     val measureTo = System.currentTimeMillis()
     // per query, the median over passes: a pass that a stall hit shifts
@@ -105,11 +118,6 @@ object QuerySuite {
       rep.sample("query_s_p85", "s", Stats.quantile(qs, 0.85))
     }
 
-    if (record) {
-      Files.write(expectedFile, results.toSeq.sortBy(_._1).map {
-        case (q, outs) => s"$q\t${outs.head._1}\t${outs.head._2}"
-      }.asJava)
-    }
     val expected = Files.readAllLines(expectedFile).asScala
       .map(_.split("\t")).map(a => a(0) -> (a(1).toLong, a(2))).toMap
     Selected.foreach { q =>
